@@ -237,9 +237,11 @@ object Bench {
       // suspect adjudication needs. The copy is keyed by the core count
       // the run bound, so multiple same-round runs each leave their own
       // forensics. Additions-only: the canonical artifact and the stdout
-      // line are unchanged.
+      // line are unchanged. The suffix is the live session's parallelism,
+      // not the env default, so a session built with an explicit thread
+      // count is labelled by what it ran on.
       java.nio.file.Files.copy(new java.io.File("BENCH_FULL.json").toPath,
-        new java.io.File(s"BENCH_FULL_${Sessions.cpus}c.json").toPath,
+        new java.io.File(s"BENCH_FULL_${spark.sparkContext.defaultParallelism}c.json").toPath,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       ()
     }

@@ -241,6 +241,24 @@ object DedupQueries {
     s"""WITH $PairsCteSql
        |SELECT doc_a, doc_b, jaccard FROM verified""".stripMargin)(nearDupPairs)
 
+  /** Σcomponent of a label frame, the convergence signal of `components`.
+    * DECIMAL(38,0) accumulation keeps the sum exact at any id scale (a
+    * double sum could alias two different label states; a long sum could
+    * overflow at 10¹²⁺ ids). A NULL sum is zero only for an empty frame;
+    * over rows it is an overflow (non-ANSI) or NULL labels, and mapping it
+    * to zero would make two different label states compare equal — a
+    * false convergence — so it fails. The emptiness check runs only on the
+    * NULL branch: the normal path gains no job.
+    */
+  private[analytics] def labelSum(df: DataFrame): java.math.BigDecimal = {
+    val s = df.agg(sum(col("component").cast(DecimalType(38, 0)))).collect()(0).getDecimal(0)
+    if (s != null) s
+    else {
+      require(df.isEmpty, "component label sum is NULL over a non-empty frame (DECIMAL overflow?)")
+      java.math.BigDecimal.ZERO
+    }
+  }
+
   /** Connected components over the near-dup pair graph — the dedup
     * end-game: each group of mutually-similar documents collapses to one
     * component whose id (= min doc_id in the component) is the keeper.
@@ -276,14 +294,7 @@ object DedupQueries {
     // non-increasing per key (min-propagation over a fixed key set), so
     // `next == labels` iff Σcomponent is unchanged — one partial-aggregated
     // scan of the just-checkpointed frame instead of the historical
-    // join-and-count of two full label tables per round. DECIMAL(38,0)
-    // accumulation keeps the sum exact at any id scale (a double sum
-    // could alias two different label states; a long sum could overflow
-    // at 10¹²⁺ ids).
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      Option(df.agg(sum(col("component").cast(DecimalType(38, 0))))
-        .collect()(0).getDecimal(0))
-        .getOrElse(java.math.BigDecimal.ZERO) // empty graph: sum is NULL
+    // join-and-count of two full label tables per round.
     var prevSum = labelSum(labels)
     var converged = false
     var rounds = 0

@@ -3,6 +3,7 @@ package graft.ingest
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** The idempotent dedup-append sink — the reference's
   * `INSERT … ON CONFLICT (key) DO NOTHING` (SURVEY.md §2.5 K1-K8,
@@ -61,26 +62,41 @@ object DedupSink {
     * O(touched partitions), not O(sink). Global-key sinks (partition column
     * not in the key, e.g. twitter's tweet_id) must scan all partitions: the
     * same key may already exist under another company.
+    *
+    * The scan is read with the batch's own key-column types, not an
+    * inferred schema: inference costs a footer-reading job per append, and
+    * it types an all-numeric partition value as an integer — `"0042"`'s
+    * partition would then read back as 42 and collide with `"42"`'s keys.
+    *
+    * `partitions`: the values of the sink's one partition column that the
+    * batch may carry, when the caller already knows them (IngestJob: the
+    * eligible company names). Without it the touched set is collected
+    * from the batch, which evaluates the batch's whole plan once more.
     */
   private[ingest] def existingKeys(
       spark: SparkSession,
       path: String,
       batch: DataFrame,
       key: Seq[String],
-      partitionBy: Seq[String]): DataFrame = {
+      partitionBy: Seq[String],
+      partitions: Option[Set[String]] = None): DataFrame = {
     require(readable(path), s"existingKeys on a schema-less sink dir: $path")
-    val existingAll = spark.read.parquet(path)
+    val keySchema = StructType(key.map(k => StructField(k, batch.schema(k).dataType)))
+    val existingAll = spark.read.schema(keySchema).parquet(path)
     val keySet = key.toSet
     val prunable = partitionBy.nonEmpty && partitionBy.forall(keySet)
     val existingScan =
       if (!prunable) existingAll
       else {
-        // Partition values come from the pre-dedup batch (same distinct set
-        // — the within-batch window only drops duplicate-key rows);
+        // Caller-supplied values, else the pre-dedup batch's (same distinct
+        // set — the within-batch window only drops duplicate-key rows);
         // O(batch) rows scanned, O(touched partitions) rows collected.
-        val touched = batch.select(partitionBy.map(col): _*).distinct().collect()
+        val touched: Seq[Seq[Any]] = partitions match {
+          case Some(ps) => ps.toSeq.map(Seq(_))
+          case None => batch.select(partitionBy.map(col): _*).distinct().collect().toSeq.map(_.toSeq)
+        }
         val filters = partitionBy.zipWithIndex.map { case (c, i) =>
-          val vs = touched.map(_.get(i)).toSeq
+          val vs = touched.map(_(i))
           val nonNull = vs.filter(_ != null)
           val base = if (nonNull.isEmpty) lit(false) else col(c).isin(nonNull: _*)
           if (vs.contains(null)) base || col(c).isNull else base
@@ -97,11 +113,22 @@ object DedupSink {
     * Counts are materialized BEFORE the write: the fresh-rows plan reads the
     * sink path it is about to append to, and Spark invalidates/refreshes
     * plans on that path after the write — a post-write evaluation would see
-    * its own insertions in the anti-join and report 0.
-    */
-  /** `partitionBy`: physical layout columns for the sink (the engine's one
+    * its own insertions in the anti-join and report 0. They are taken in
+    * one stage over the checkpointed rows (per-task hash counts merged on
+    * the driver), where a DataFrame `groupBy().count()` would add a shuffle
+    * stage that AQE runs as a second job.
+    *
+    * `partitionBy`: physical layout columns for the sink (the engine's one
     * owned physical decision, SURVEY.md §4 — fact tables partition by
     * company so per-company analytics and the watermark path prune files).
+    *
+    * `partitions`: the partition values the batch may carry, if the caller
+    * knows them (see `existingKeys`); requires `groupCol` to be the one
+    * partition column. The existing-key scan is pruned to exactly this set,
+    * so a batch row outside it would dodge the dedup — before writing, every
+    * group with fresh rows is checked against the set, and a group outside
+    * it fails the append with nothing written. Such a row always survives
+    * the anti-join (its partition was not scanned), so the check sees it.
     */
   def append(
       spark: SparkSession,
@@ -110,7 +137,11 @@ object DedupSink {
       key: Seq[String],
       tiebreak: Seq[Column],
       groupCol: Option[String] = None,
-      partitionBy: Seq[String] = Nil): AppendResult = {
+      partitionBy: Seq[String] = Nil,
+      partitions: Option[Set[String]] = None): AppendResult = {
+    require(partitions.isEmpty || (partitionBy.size == 1 && groupCol == partitionBy.headOption),
+      s"a caller-supplied partition set needs groupCol = the one partition column, " +
+        s"got groupCol=$groupCol partitionBy=$partitionBy")
     // Total order: caller tiebreak first, then every remaining column —
     // the surviving representative is independent of partitioning.
     // nulls_last EVERYWHERE (tiebreaks included — Spark's bare-column
@@ -127,7 +158,7 @@ object DedupSink {
       .drop("__rn")
     val fresh =
       if (readable(path)) {
-        val existing = existingKeys(spark, path, batch, key, partitionBy)
+        val existing = existingKeys(spark, path, batch, key, partitionBy, partitions)
         val cond = key.map(k => deduped(k) <=> existing(k)).reduce(_ && _)
         deduped.join(existing, cond, "left_anti")
       } else deduped
@@ -138,13 +169,20 @@ object DedupSink {
     // checkpoint truncates the lineage — the write can only read the
     // materialized blocks, and block loss fails the job loudly instead.
     val snapshot = fresh.localCheckpoint(true)
-    val perGroup = groupCol match {
-      case Some(g) =>
-        snapshot.groupBy(g).count().collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-      case None => Map.empty[String, Long]
+    val counts = snapshot.select(groupCol.map(col).getOrElse(lit(null).cast("string"))).rdd
+      .mapPartitions { rows =>
+        val m = scala.collection.mutable.HashMap.empty[String, Long]
+        rows.foreach { r => m(r.getString(0)) = m.getOrElse(r.getString(0), 0L) + 1L }
+        Iterator.single(m.toMap)
+      }
+      .fold(Map.empty[String, Long])(mergeCounts)
+    val perGroup = if (groupCol.isDefined) counts else Map.empty[String, Long]
+    val total = counts.values.sum
+    partitions.foreach { ps =>
+      val stray = perGroup.keySet -- ps
+      require(stray.isEmpty, s"batch rows outside the caller's partition set $ps: " +
+        s"${stray.mkString(", ")} (their existing keys were not scanned)")
     }
-    val total = if (groupCol.isDefined) perGroup.values.sum else snapshot.count()
     def writer(mode: String) = {
       val w = snapshot.write.mode(mode)
       (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)
@@ -163,4 +201,7 @@ object DedupSink {
     }
     AppendResult(total, perGroup)
   }
+
+  private def mergeCounts(a: Map[String, Long], b: Map[String, Long]): Map[String, Long] =
+    b.foldLeft(a) { case (acc, (k, n)) => acc.updated(k, acc.getOrElse(k, 0L) + n) }
 }

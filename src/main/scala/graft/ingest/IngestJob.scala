@@ -50,6 +50,17 @@ object IngestJob {
     * data plane is a single scan + broadcast control join — plan size O(1)
     * in company count, where a per-company union would grow the logical
     * plan linearly and choke Catalyst at 10⁴ companies. One sink write.
+    *
+    * Per-run job floor: the control table is read with its declared schema
+    * (no inference job, here or in the watermark advance); the sink is
+    * handed the eligible company names as its touched partitions, so it
+    * neither evaluates the batch a second time to find them nor infers the
+    * existing keys' schema, and it fails the run before writing if the
+    * batch carries a company outside that set; insert counts come from one
+    * stage over the sink's checkpoint. A run with nothing eligible launches
+    * one job (the control scan); otherwise it adds the fetch/normalize/
+    * dedup shuffle stages, the sink's checkpoint and count, and, only when
+    * rows were inserted, the sink write and one control-table rewrite.
     */
   def run(
       spark: SparkSession,
@@ -100,7 +111,8 @@ object IngestJob {
     val res = DedupSink.append(
       spark, s"$warehouse/${spec.sinkName}", all, key, spec.tiebreak.map(col),
       groupCol = Some("company_name"),
-      partitionBy = Seq("company_name"))
+      partitionBy = Seq("company_name"),
+      partitions = Some(rows.map(_.getString(1)).toSet))
 
     val advancedIds = rows.collect {
       case r if res.perGroup.getOrElse(r.getString(1), 0L) > 0L => r.getInt(0)

@@ -3,6 +3,7 @@ package graft.ingest
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.schema.Schemas
 
 /** Per-key watermark control table — the reference's `users.last_fetched_*`
   * columns (SURVEY.md §2.11, utils/db_helpers.py:78-90). Deliberately NOT
@@ -14,12 +15,15 @@ import org.apache.spark.sql.functions._
   * Monotonicity is enforced here (never move backwards), which also makes
   * the advance idempotent. Storage is a parquet dir swapped atomically via
   * tmp-write + rename; production would keep `users` in Delta and MERGE.
+  *
+  * Reads use the declared `Schemas.users`: the table's shape is fixed, and
+  * parquet schema inference would cost a footer-reading job on every read.
   */
 object Watermarks {
 
   def read(spark: SparkSession, usersPath: String): DataFrame = {
     recover(spark, usersPath)
-    spark.read.parquet(usersPath)
+    spark.read.schema(Schemas.users).parquet(usersPath)
   }
 
   /** Crash recovery for the delete→rename window in overwriteParquet: if

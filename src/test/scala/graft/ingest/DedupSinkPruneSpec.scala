@@ -1,6 +1,7 @@
 package graft.ingest
 
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import graft.TestSpark
 
@@ -93,5 +94,51 @@ class DedupSinkPruneSpec extends AnyFunSuite {
       Seq(col("rid")), partitionBy = Seq("company_name"))
     assert(res.inserted == 1)
     assert(spark.read.parquet(path).count() == 3)
+  }
+
+  test("an all-numeric company name is not conflated with its integer value") {
+    // schema inference types partition dirs company_name=42 as an integer,
+    // so "0042"'s key would read back as 42 and collide with "42"'s
+    val path = tmp()
+    val key = Seq("company_name", "rid")
+    DedupSink.append(spark, path, Seq(("42", 1L)).toDF("company_name", "rid"), key,
+      Seq(col("rid")), partitionBy = Seq("company_name"))
+    val res = DedupSink.append(spark, path, Seq(("0042", 1L)).toDF("company_name", "rid"), key,
+      Seq(col("rid")), partitionBy = Seq("company_name"))
+    assert(res.inserted == 1)
+    // a bare spark.read.parquet would infer integer partition values too
+    val stored = spark.read.schema("rid BIGINT, company_name STRING").parquet(path)
+      .select("company_name", "rid").as[(String, Long)].collect().toSet
+    assert(stored == Set(("42", 1L), ("0042", 1L)))
+  }
+
+  test("a caller partition set missing a batch company fails before any write") {
+    val path = tmp()
+    val seed = Seq(("acme", 1L, "a"), ("globex", 2L, "b"))
+      .toDF("company_name", "rid", "payload")
+    DedupSink.append(spark, path, seed, Seq("company_name", "rid"), Seq(col("rid")),
+      partitionBy = Seq("company_name"))
+    def files(): Map[String, (Long, Long)] = {
+      val root = java.nio.file.Paths.get(path)
+      val walk = java.nio.file.Files.walk(root)
+      try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_)).map { p =>
+        root.relativize(p).toString ->
+          (java.nio.file.Files.size(p), java.nio.file.Files.getLastModifiedTime(p).toMillis)
+      }.toMap finally walk.close()
+    }
+    val before = files()
+
+    // globex is not declared: its partition would not be scanned, and its
+    // already-stored rid=2 would be inserted a second time
+    val batch = Seq(("acme", 9L, "new"), ("globex", 2L, "dup"))
+      .toDF("company_name", "rid", "payload")
+    val err = intercept[IllegalArgumentException] {
+      DedupSink.append(spark, path, batch, Seq("company_name", "rid"), Seq(col("rid")),
+        groupCol = Some("company_name"), partitionBy = Seq("company_name"),
+        partitions = Some(Set("acme")))
+    }
+    assert(err.getMessage.contains("globex"))
+    assert(files() == before)
+    assert(spark.read.parquet(path).count() == 2)
   }
 }

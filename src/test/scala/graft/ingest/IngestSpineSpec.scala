@@ -2,6 +2,9 @@ package graft.ingest
 
 import java.nio.file.Files
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
@@ -178,5 +181,37 @@ class IngestSpineSpec extends AnyFunSuite {
     val authors = spark.read.parquet(s"$wh/trustpilot_reviews")
       .select("author_name").collect().map(_.getString(0)).toSet
     assert(authors == Set("Ann", "Bob"))
+  }
+
+  test("job floor: a repeat run infers no parquet schema and collects nothing in the sink") {
+    val (wh, users) = fresh()
+    Watermarks.advance(spark, users, "trustpilot", Set(1), wm2020)
+    val spec = Pipelines.specs(fixturesDir).find(_.platform == "trustpilot").get
+    assert(IngestJob.run(spark, users, wh, spec, General(40), now).inserted == 2)
+    // an hour later Acme is stale again and its page-capped source
+    // re-delivers the same two reviews: every layer runs, nothing is new
+    val later = new Timestamp(now.getTime + 3600000L)
+    val sc = spark.sparkContext
+    val tag = s"ingest-floor-${System.nanoTime}"
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.test.tag") == tag))
+          e.stageInfos.foreach(st => stages.add(st.name))
+    }
+    TestListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty("graft.test.tag", tag)
+      val res = try IngestJob.run(spark, users, wh, spec, General(40), later)
+        finally sc.setLocalProperty("graft.test.tag", null)
+      assert(res.perCompany.isEmpty && res.inserted == 0)
+      TestListenerBus.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    val names = stages.asScala.toSeq
+    assert(names.exists(_.contains("DedupSink.scala")), s"the run must reach the sink: $names")
+    val floor = names.filter(n => n.startsWith("parquet at Watermarks.scala") ||
+      n.startsWith("parquet at DedupSink.scala") || n.startsWith("collect at DedupSink.scala"))
+    assert(floor.isEmpty, s"schema-inference or partition-collect jobs in a repeat run: $floor")
   }
 }
